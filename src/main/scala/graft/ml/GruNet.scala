@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Trainable GRU sequence model with EXACT analytic backpropagation
   * through time — closing the reference's last un-countered capability
@@ -9,22 +8,18 @@ import org.apache.spark.storage.StorageLevel
   * TRAINED, not just run forward). Architecture: single-layer GRU over
   * the (steps × features) window → global mean-pool over hidden states →
   * dense head — the recurrent core of the reference's GRU/TFT stack
-  * (NeuralStub carries the full inference-only stack; what training
-  * requires, and what this module adds, is the gradient flowing through
-  * the recurrence).
+  * ([[TftNet]] carries the full stack).
   *
-  * The cell matches NeuralStub.gru's conventions (update gate z, reset
-  * gate r, candidate via reset-scaled state, h' = (1-z)h + z·c), plus
-  * biases as in the Keras layer. Gradients are derived by hand and pinned
-  * against central finite differences in GruNetSpec — the strongest
-  * correctness statement available for a backward pass.
+  * The cell is [[TftNet]]'s GRU layer (update gate z, reset gate r,
+  * candidate via reset-scaled state, h' = (1-z)h + z·c, biases as in the
+  * Keras layer). Gradients are derived by hand and pinned against central
+  * finite differences in GruNetSpec — the strongest correctness statement
+  * available for a backward pass.
   *
-  * Scale shape — identical to [[Trainer]]: windows are persisted once;
-  * each epoch is one distributed pass emitting a single flat O(|θ|)
-  * gradient partial per partition, folded on the driver in partition
-  * order (float addition isn't associative; completion-ordered combines
-  * would drift between runs). Adam moments and callbacks live on the
-  * driver via [[Optimizer.adamLoop]]. No per-row state ever ships.
+  * Training runs through [[Optimizer.fit]], which owns the scale shape
+  * (persisted windows, one partition-ordered O(|θ|) gradient pass per
+  * epoch, driver-side Adam and callbacks); this module supplies only the
+  * per-sample loss and gradient.
   */
 object GruNet {
 
@@ -45,8 +40,8 @@ object GruNet {
   }
 
   /** Deterministic seeded init (hash-uniform in ±0.5/√fanIn, biases 0) —
-    * reproducible across runs and partitionings like NeuralStub's
-    * weights. */
+    * each weight is a pure function of (seed, block, position), so it is
+    * reproducible across runs and partitionings. */
   def init(dims: Dims, seed: Long): Array[Double] = {
     val a = new Array[Double](dims.size)
     def fill(off: Int, rows: Int, cols: Int, s: Long): Unit = {
@@ -162,9 +157,7 @@ object GruNet {
   def lossSample(seq: Array[Array[Double]], y: Array[Double],
                  w: Array[Double], dims: Dims, delta: Double): Double = {
     val yh = predict(seq, w, dims)
-    var l = 0.0; var i = 0
-    while (i < dims.m) { l += Optimizer.huber(yh(i) - y(i), delta)._1; i += 1 }
-    l
+    Optimizer.huberHead(yh, y, delta, new Array[Double](yh.length))
   }
 
   /** One sample's raw loss, with its raw gradient ACCUMULATED into `grad`
@@ -175,17 +168,11 @@ object GruNet {
     import dims._
     val T = seq.length
     val cache = forwardCached(seq, w, dims)
-    var loss = 0.0
     val dy = new Array[Double](m)
-    var i = 0
-    while (i < m) {
-      val (rho, psi) = Optimizer.huber(cache.yhat(i) - y(i), delta)
-      loss += rho; dy(i) = psi
-      i += 1
-    }
+    val loss = Optimizer.huberHead(cache.yhat, y, delta, dy)
     // Head: ŷ = Wo·p + bo
     outer(grad, woOff, m, d, dy, cache.pooled)
-    i = 0; while (i < m) { grad(boOff + i) += dy(i); i += 1 }
+    var i = 0; while (i < m) { grad(boOff + i) += dy(i); i += 1 }
     val dp = new Array[Double](d)
     mtv(w, woOff, m, d, dy, dp)
     val dhPool = new Array[Double](d)
@@ -238,48 +225,13 @@ object GruNet {
     loss
   }
 
-  /** One distributed pass over `rows`: mean Huber loss (per sample×output)
-    * and its gradient — the [[DistGrad]] partition-ordered fold shared
-    * with [[TftNet]]. */
-  private def lossGrad(
-      rows: org.apache.spark.rdd.RDD[(Array[Array[Double]], Array[Double])],
-      w: Array[Double], dims: Dims, delta: Double,
-      withGrad: Boolean): (Double, Array[Double]) =
-    DistGrad.meanLossGrad(rows, dims.size, dims.m) { (xs, ys, g) =>
-      if (withGrad) lossGradSample(xs, ys, w, dims, delta, g)
-      else lossSample(xs, ys, w, dims, delta)
-    }
-
-  /** Fit result: best weights (restore_best semantics) + history. */
-  final case class TrainedGru(
-      dims: Dims, weights: Array[Double],
-      history: Seq[Trainer.EpochLog],
-      stoppedEarly: Boolean, bestEpoch: Int, bestValLoss: Double)
-
   /** Train on the `split = 'train'` windows of a frame carrying
     * `x: array<array<double>>` (steps × features), `y: array<double>`,
     * and `split`, validating on `split = 'val'`. */
   def fit(windows: DataFrame, dims: Dims, cfg: Trainer.Config = Trainer.Config(),
-          seed: Long = 1234L): TrainedGru = {
-    import org.apache.spark.sql.functions.col
-    def rowsOf(split: String) = windows
-      .filter(col("split") === split)
-      .select(col("x"), col("y")).rdd
-      // Nested array cells decode as scala.collection.Seq (mutable
-      // ArraySeq), not immutable Seq — type accordingly.
-      .map(r => (r.getSeq[scala.collection.Seq[Double]](0).map(_.toArray).toArray,
-        r.getSeq[Double](1).toArray))
-    val train = rowsOf("train").persist(StorageLevel.MEMORY_AND_DISK)
-    val valid = rowsOf("val").persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ff = Optimizer.adamLoop(init(dims, seed), cfg)(
-        wf => lossGrad(train, wf, dims, cfg.huberDelta, withGrad = true),
-        wf => lossGrad(valid, wf, dims, cfg.huberDelta, withGrad = false)._1)
-      TrainedGru(dims, ff.weights, ff.history, ff.stoppedEarly,
-        ff.bestEpoch, ff.bestValLoss)
-    } finally {
-      train.unpersist(blocking = false)
-      valid.unpersist(blocking = false)
-    }
-  }
+          seed: Long = 1234L): Optimizer.TrainedNet[Dims] =
+    Optimizer.fit(windows, init(dims, seed), dims.m, cfg)(Optimizer.windowSample)(
+      w => { case ((xs, ys), g) => lossGradSample(xs, ys, w, dims, cfg.huberDelta, g) },
+      w => { case (xs, ys) => lossSample(xs, ys, w, dims, cfg.huberDelta) })
+      .withDims(dims)
 }

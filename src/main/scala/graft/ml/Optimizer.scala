@@ -1,16 +1,30 @@
 package graft.ml
 
-/** The shared training loop: Adam (bias-corrected) + EarlyStopping
-  * (patience, restore_best_weights) + ReduceLROnPlateau over a FLAT
-  * parameter vector — the loop mechanics of the reference trainer
-  * (`train.py:239-249`), factored out of [[Trainer]] so the linear VAR
-  * trainer and the GRU trainer ([[GruNet]]) share one implementation.
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
+
+/** The one training harness every trainer here runs through ([[Trainer]],
+  * [[GruNet]], [[TftNet]], [[LogReg]]): the `split` column of the input
+  * frame → persisted train/val samples → Adam (bias-corrected) +
+  * EarlyStopping (patience, restore_best_weights) + ReduceLROnPlateau over
+  * a FLAT parameter vector — the loop mechanics of the reference trainer
+  * (`train.py:239-249`). A model supplies only its per-sample loss and
+  * gradient.
   *
-  * The loop is driver-side O(|params|) state; each epoch calls the
-  * caller's gradient function exactly once (one distributed pass) and the
-  * validation function once. Everything here is plain elementwise
+  * Scale shape: per-sample work is embarrassingly parallel; each epoch is
+  * one distributed gradient pass and one validation pass, each emitting a
+  * single flat O(|θ|) partial per partition that the driver folds in
+  * PARTITION ORDER — float addition isn't associative, and a
+  * completion-ordered fold would drift between runs, breaking the engine's
+  * bit-exact determinism contract. Only (loss, gradient) vectors cross the
+  * wire, and driver state (weights, Adam moments) stays O(|θ|) regardless
+  * of data volume. Everything on the driver is plain elementwise
   * arithmetic in parameter order — deterministic for deterministic
-  * gradient functions.
+  * per-sample functions.
   */
 object Optimizer {
 
@@ -20,7 +34,83 @@ object Optimizer {
       history: Seq[Trainer.EpochLog],
       stoppedEarly: Boolean,
       bestEpoch: Int,
-      bestValLoss: Double)
+      bestValLoss: Double) {
+    def withDims[D](dims: D): TrainedNet[D] =
+      TrainedNet(dims, weights, history, stoppedEarly, bestEpoch, bestValLoss)
+  }
+
+  /** A trained network: its dimensions, best weights (restore_best
+    * semantics) and the loop's history. */
+  final case class TrainedNet[D](
+      dims: D, weights: Array[Double],
+      history: Seq[Trainer.EpochLog],
+      stoppedEarly: Boolean, bestEpoch: Int, bestValLoss: Double)
+
+  /** Decoder for sequence-window frames: `x: array<array<double>>`
+    * (steps × features), `y: array<double>`. Nested array cells decode as
+    * scala.collection.Seq (mutable ArraySeq), not immutable Seq. */
+  val windowSample: Row => (Array[Array[Double]], Array[Double]) = r =>
+    (r.getSeq[scala.collection.Seq[Double]](0).map(_.toArray).toArray,
+      r.getSeq[Double](1).toArray)
+
+  /** Train on the `split = 'train'` rows of `frame`, validating per epoch
+    * on `split = 'val'`. Both splits' `(x, y)` columns are decoded once by
+    * `decode` and persisted for the length of the fit.
+    *
+    * @param outputs  outputs per sample — the mean loss and gradient are
+    *                 taken per (sample × output)
+    * @param lossGrad at the given weights: one sample's RAW loss, with its
+    *                 raw gradient ACCUMULATED into the array it is handed
+    * @param loss     at the given weights: one sample's raw loss
+    */
+  def fit[S: ClassTag](frame: DataFrame, init: Array[Double], outputs: Int,
+                       cfg: Trainer.Config)(decode: Row => S)(
+      lossGrad: Array[Double] => (S, Array[Double]) => Double,
+      loss: Array[Double] => S => Double): FlatFit = {
+    def samples(split: String) = frame
+      .filter(col("split") === split)
+      .select(col("x"), col("y")).rdd
+      .map(decode)
+    val train = samples("train")
+    val valid = samples("val")
+    train.persist(StorageLevel.MEMORY_AND_DISK)
+    valid.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      adamLoop(init, cfg)(
+        w => meanLossGrad(train, init.length, outputs)(lossGrad(w)),
+        w => {
+          val l = loss(w)
+          meanLossGrad(valid, 0, outputs)((s, _) => l(s))._1
+        })
+    } finally {
+      train.unpersist(blocking = false)
+      valid.unpersist(blocking = false)
+    }
+  }
+
+  /** Mean (per sample × output) loss and gradient over `rows`: one
+    * `size`-wide partial per partition, folded on the driver by partition
+    * index (`size = 0` for a loss-only pass). */
+  private def meanLossGrad[S](rows: RDD[S], size: Int, outputs: Int)(
+      sample: (S, Array[Double]) => Double): (Double, Array[Double]) = {
+    val partials = rows.mapPartitionsWithIndex { (pid, it) =>
+      val g = new Array[Double](size)
+      var l = 0.0
+      var c = 0L
+      it.foreach { s => l += sample(s, g); c += 1 }
+      Iterator.single((pid, l, g, c))
+    }.collect().sortBy(_._1)
+    var loss = 0.0
+    var cnt = 0L
+    val grad = new Array[Double](size)
+    partials.foreach { case (_, l, g, c) =>
+      loss += l; cnt += c
+      var i = 0; while (i < size) { grad(i) += g(i); i += 1 }
+    }
+    val denom = math.max(cnt, 1L).toDouble * outputs
+    var i = 0; while (i < size) { grad(i) /= denom; i += 1 }
+    (loss / denom, grad)
+  }
 
   /** Run the Adam + callback loop from `init`.
     *
@@ -28,7 +118,7 @@ object Optimizer {
     *                      (one distributed pass)
     * @param valLoss       mean validation loss at the given weights
     */
-  def adamLoop(init: Array[Double], cfg: Trainer.Config)(
+  private def adamLoop(init: Array[Double], cfg: Trainer.Config)(
       trainLossGrad: Array[Double] => (Double, Array[Double]),
       valLoss: Array[Double] => Double): FlatFit = {
     import scala.concurrent.{Await, Future}
@@ -98,18 +188,32 @@ object Optimizer {
     }
     } finally {
       // Drain the in-flight speculative pass on EVERY exit path (ADVICE
-      // r21: a valLoss/callback throw would otherwise leak a distributed
-      // pass past the fit, racing the caller's finally-unpersist of the
-      // training RDD it still reads): the caller unpersists the training
-      // RDD right after, and the bench's timing window for the NEXT
-      // query must not inherit a stray job.
+      // r21): a valLoss/callback throw would otherwise leak a distributed
+      // pass past the fit, racing `fit`'s unpersist of the training RDD it
+      // still reads, and the bench's timing window for the NEXT query
+      // must not inherit a stray job.
       if (gradFut != null) { Await.ready(gradFut, Duration.Inf); () }
     }
     FlatFit(best, history.toSeq, stopped, bestEpoch, bestVal)
   }
 
   /** Huber ρ and ψ (loss and d loss/d residual) at delta. */
-  def huber(r: Double, delta: Double): (Double, Double) =
+  private def huber(r: Double, delta: Double): (Double, Double) =
     if (math.abs(r) <= delta) (0.5 * r * r, r)
     else (delta * (math.abs(r) - 0.5 * delta), delta * math.signum(r))
+
+  /** Huber output head of one sample: returns Σᵢ ρ(ŷᵢ − yᵢ) (the raw
+    * loss, summed in output order) and writes ψ(ŷᵢ − yᵢ) = ∂loss/∂ŷᵢ into
+    * `dy`. */
+  def huberHead(yhat: Array[Double], y: Array[Double], delta: Double,
+                dy: Array[Double]): Double = {
+    var loss = 0.0
+    var i = 0
+    while (i < yhat.length) {
+      val (rho, psi) = huber(yhat(i) - y(i), delta)
+      loss += rho; dy(i) = psi
+      i += 1
+    }
+    loss
+  }
 }

@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** The reference's FULL hybrid architecture, trainable end-to-end with
   * EXACT analytic backpropagation (`train.py:115-173`):
@@ -17,19 +16,19 @@ import org.apache.spark.storage.StorageLevel
   * derived by hand and pinned against central finite differences in
   * TftNetSpec, the same contract GruNetSpec established.
   *
-  * Faithfulness notes (diffs from [[NeuralStub]]'s fixed-weight forward):
-  * the GRN gate reads the layer INPUT (`train.py:133`: `x_val *
-  * self.gate(x)`), not the hidden activation, and both GRU layers of the
-  * reference are present (`train.py:158-160`). Dropout (a train-time
-  * regularizer, `train.py:121,158`) is run at rate 0: the engine's
-  * bit-exact determinism contract forbids per-step random masks, and at
-  * rate 0 the layer is the identity Keras applies at inference.
+  * Faithfulness notes: the GRN gate reads the layer INPUT (`train.py:133`:
+  * `x_val * self.gate(x)`), and both GRU layers of the reference are
+  * present (`train.py:158-160`). Dropout (a train-time regularizer,
+  * `train.py:121,158`) is run at rate 0: the engine's bit-exact
+  * determinism contract forbids per-step random masks, and at rate 0 the
+  * layer is the identity Keras applies at inference.
   *
-  * Scale shape — identical to [[Trainer]]/[[GruNet]]: windows persisted
-  * once, one distributed pass per epoch emitting a flat O(|θ|) gradient
-  * partial per partition ([[DistGrad]]), partition-ordered fold, Adam +
-  * EarlyStopping + ReduceLROnPlateau driver-side via
-  * [[Optimizer.adamLoop]]. No per-row state ever ships.
+  * [[predict]] is the engine's one forward pass for this stack: the
+  * trained hybrid queries score with fitted weights, and the fixed-weight
+  * inference queries with [[init]] weights at the reference's scaled-down
+  * widths. Training runs through [[Optimizer.fit]] (persisted windows, one
+  * partition-ordered O(|θ|) gradient pass per epoch, driver-side Adam and
+  * callbacks); this module supplies only the per-sample loss and gradient.
   */
 object TftNet {
 
@@ -384,15 +383,15 @@ object TftNet {
 
   // ---- Multi-head scaled-dot self-attention ------------------------------
 
-  private final class AttCache(val qs: Array[Array[Array[Double]]],
-                               val ks: Array[Array[Array[Double]]],
-                               val vs: Array[Array[Array[Double]]],
-                               val alph: Array[Array[Array[Double]]],
-                               val u: Array[Array[Double]],
-                               val y: Array[Array[Double]])
+  private[graft] final class AttCache(val qs: Array[Array[Array[Double]]],
+                                      val ks: Array[Array[Array[Double]]],
+                                      val vs: Array[Array[Array[Double]]],
+                                      val alph: Array[Array[Array[Double]]],
+                                      val u: Array[Array[Double]],
+                                      val y: Array[Array[Double]])
 
-  private def attForward(seq: Array[Array[Double]], w: Array[Double],
-                         dims: Dims): AttCache = {
+  private[graft] def attForward(seq: Array[Array[Double]], w: Array[Double],
+                                dims: Dims): AttCache = {
     import dims.{heads, kd, d2}
     val T = seq.length
     val scale = 1.0 / math.sqrt(kd)
@@ -604,9 +603,7 @@ object TftNet {
   def lossSample(seq: Array[Array[Double]], y: Array[Double],
                  w: Array[Double], dims: Dims, delta: Double): Double = {
     val yh = predict(seq, w, dims)
-    var l = 0.0; var i = 0
-    while (i < dims.m) { l += Optimizer.huber(yh(i) - y(i), delta)._1; i += 1 }
-    l
+    Optimizer.huberHead(yh, y, delta, new Array[Double](yh.length))
   }
 
   /** One sample's raw loss with its raw gradient ACCUMULATED into `grad` —
@@ -617,17 +614,11 @@ object TftNet {
     import dims._
     val T = seq.length
     val cache = forwardCached(seq, w, dims)
-    var loss = 0.0
     val dy = new Array[Double](m)
-    var i = 0
-    while (i < m) {
-      val (rho, psi) = Optimizer.huber(cache.yhat(i) - y(i), delta)
-      loss += rho; dy(i) = psi
-      i += 1
-    }
+    val loss = Optimizer.huberHead(cache.yhat, y, delta, dy)
     // Dense head
     outerAcc(grad, hW, m, g2, dy, cache.grn2.out)
-    i = 0; while (i < m) { grad(hB + i) += dy(i); i += 1 }
+    var i = 0; while (i < m) { grad(hB + i) += dy(i); i += 1 }
     val dgo = new Array[Double](g2)
     mtv(w, hW, m, g2, dy, dgo)
     // GRN2 → pooled
@@ -661,38 +652,13 @@ object TftNet {
     loss
   }
 
-  /** Fit result: best weights (restore_best semantics) + history. */
-  final case class TrainedTft(
-      dims: Dims, weights: Array[Double],
-      history: Seq[Trainer.EpochLog],
-      stoppedEarly: Boolean, bestEpoch: Int, bestValLoss: Double)
-
   /** Train on the `split = 'train'` windows of a frame carrying
     * `x: array<array<double>>` (steps × features), `y: array<double>`,
     * and `split`, validating on `split = 'val'`. */
   def fit(windows: DataFrame, dims: Dims, cfg: Trainer.Config = Trainer.Config(),
-          seed: Long = 1234L): TrainedTft = {
-    import org.apache.spark.sql.functions.col
-    def rowsOf(split: String) = windows
-      .filter(col("split") === split)
-      .select(col("x"), col("y")).rdd
-      .map(r => (r.getSeq[scala.collection.Seq[Double]](0).map(_.toArray).toArray,
-        r.getSeq[Double](1).toArray))
-    val train = rowsOf("train").persist(StorageLevel.MEMORY_AND_DISK)
-    val valid = rowsOf("val").persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ff = Optimizer.adamLoop(init(dims, seed), cfg)(
-        wf => DistGrad.meanLossGrad(train, dims.size, dims.m) { (xs, ys, g) =>
-          lossGradSample(xs, ys, wf, dims, cfg.huberDelta, g)
-        },
-        wf => DistGrad.meanLossGrad(valid, dims.size, dims.m) { (xs, ys, _) =>
-          lossSample(xs, ys, wf, dims, cfg.huberDelta)
-        }._1)
-      TrainedTft(dims, ff.weights, ff.history, ff.stoppedEarly,
-        ff.bestEpoch, ff.bestValLoss)
-    } finally {
-      train.unpersist(blocking = false)
-      valid.unpersist(blocking = false)
-    }
-  }
+          seed: Long = 1234L): Optimizer.TrainedNet[Dims] =
+    Optimizer.fit(windows, init(dims, seed), dims.m, cfg)(Optimizer.windowSample)(
+      w => { case ((xs, ys), g) => lossGradSample(xs, ys, w, dims, cfg.huberDelta, g) },
+      w => { case (xs, ys) => lossSample(xs, ys, w, dims, cfg.huberDelta) })
+      .withDims(dims)
 }

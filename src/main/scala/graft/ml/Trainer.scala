@@ -2,26 +2,18 @@ package graft.ml
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
-/** Distributed training loop — the engine's counterpart of the reference
-  * trainer's loop mechanics (`train.py:239-249`): Huber loss, Adam,
-  * `EarlyStopping(patience, restore_best_weights)`, and
-  * `ReduceLROnPlateau(factor, patience)`, over the same lagged design
-  * matrix the VAR fit uses. The model is the multi-output linear
-  * forecaster ŷ = W·[1, x] (the VAR shape): what this module adds is the
-  * LOOP — the reference's GRU/TFT backprop stays out of relational scope
-  * (SURVEY §2.10 M7; NeuralStub covers deterministic inference), but the
-  * optimizer/callback machinery a user of the reference relies on now has
-  * an engine-native, cluster-shaped implementation.
+/** Distributed linear trainer — the reference trainer's loop mechanics
+  * (`train.py:239-249`: Huber loss, Adam, `EarlyStopping(patience,
+  * restore_best_weights)`, `ReduceLROnPlateau(factor, patience)`) over the
+  * same lagged design matrix the VAR fit uses. The model is the
+  * multi-output linear forecaster ŷ = W·[1, x] (the VAR shape); the neural
+  * residual models ([[GruNet]], [[TftNet]]) train through the same loop.
   *
-  * Scale shape (the MLlib GradientDescent pattern): the training rows are
-  * persisted once; each epoch is ONE distributed pass — a `treeAggregate`
-  * that reduces the (dim × k) Huber gradient and scalar loss map-side, so
-  * only O(dim·k) floats reach the driver per epoch regardless of data
-  * size. The driver holds the Adam moments (same O(dim·k)) and applies the
-  * update; callbacks run on the driver against the per-epoch validation
-  * loss (a second one-pass aggregate). No per-row state ever ships.
+  * This object holds the loop's [[Config]] and [[EpochLog]] shared by
+  * every trainer; the loop itself and its scale shape (persisted rows,
+  * one partition-ordered O(dim·k) gradient pass per epoch, driver-side
+  * Adam moments and callbacks) live in [[Optimizer.fit]].
   */
 object Trainer {
 
@@ -50,50 +42,23 @@ object Trainer {
       bestEpoch: Int,
       bestValLoss: Double)
 
-  /** One distributed pass: mean Huber loss and its gradient wrt W over
-    * `rows`. Gradient of mean loss: (1/n) Σ ψ(rᵢ) ⊗ x̃ᵢ per output row.
-    *
-    * Reduction is PARTITION-ORDERED: each partition emits one (dim × k)
-    * partial (rows within a partition are summed in their stored order)
-    * and the driver folds the partials by partition index — float addition
-    * isn't associative, and a `treeAggregate` whose combine order follows
-    * task completion drifts by ulps between runs, which would make
-    * training non-reproducible. One small dense partial per partition is
-    * also the honest cluster cost (at extreme partition counts, switch to
-    * treeAggregate and accept the drift, or fold partials pairwise in a
-    * fixed tree). */
-  private def lossGrad(
-      rows: org.apache.spark.rdd.RDD[(Array[Double], Array[Double])],
-      w: DenseMatrix[Double], delta: Double,
-      withGrad: Boolean): (Double, DenseMatrix[Double], Long) = {
-    val dim = w.rows; val k = w.cols
-    val partials = rows.mapPartitionsWithIndex { (pid, it) =>
-      val g = DenseMatrix.zeros[Double](dim, k)
-      var l = 0.0
-      var c = 0L
-      it.foreach { case (xs, ys) =>
-        val x = DenseVector(1.0 +: xs)
-        val pred = w * x
-        var i = 0
-        while (i < dim) {
-          val (rho, psi) = Optimizer.huber(pred(i) - ys(i), delta)
-          l += rho
-          if (withGrad) {
-            var j = 0
-            while (j < k) { g(i, j) += psi * x(j); j += 1 }
-          }
-          i += 1
-        }
-        c += 1
-      }
-      Iterator.single((pid, l, g, c))
-    }.collect().sortBy(_._1)
-    var loss = 0.0
-    var n = 0L
-    val grad = DenseMatrix.zeros[Double](dim, k)
-    partials.foreach { case (_, l, g, c) => loss += l; grad += g; n += c }
-    val denom = math.max(n, 1L).toDouble * dim
-    (loss / denom, grad / denom, n)
+  /** Raw Huber loss of one sample under ŷ = W·[1, x], with its raw
+    * gradient ψ(r) ⊗ x̃ accumulated into `grad` column-major — breeze's
+    * own layout, so the flat weights are the matrix's storage. An empty
+    * `grad` makes it a loss-only evaluation. */
+  private def lossGradSample(w: DenseMatrix[Double], xs: Array[Double],
+                             ys: Array[Double], delta: Double,
+                             grad: Array[Double]): Double = {
+    val dim = w.rows
+    val x = DenseVector(1.0 +: xs)
+    val dy = new Array[Double](dim)
+    val loss = Optimizer.huberHead((w * x).toArray, ys, delta, dy)
+    var j = 0
+    while (j < grad.length / dim) {
+      var i = 0; while (i < dim) { grad(j * dim + i) += dy(i) * x(j); i += 1 }
+      j += 1
+    }
+    loss
   }
 
   /** Train on the `split = 'train'` rows of a lagged design frame
@@ -101,35 +66,19 @@ object Trainer {
     * `split = 'val'`. */
   def fit(lagged: DataFrame, p: Int, dim: Int,
           cfg: Config = Config()): Trained = {
-    import org.apache.spark.sql.functions.col
-    def rowsOf(split: String) = lagged
-      .filter(col("split") === split)
-      .select(col("x"), col("y")).rdd
-      .map(r => (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray))
-    val train = rowsOf("train").persist(StorageLevel.MEMORY_AND_DISK)
-    val valid = rowsOf("val").persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val k = 1 + dim * p
-      // Flatten column-major (breeze's own layout) so the shared Adam loop
-      // walks parameters in a fixed order.
-      def flat(mat: DenseMatrix[Double]): Array[Double] = {
-        val a = new Array[Double](dim * k)
-        var j = 0
-        while (j < k) { var i = 0; while (i < dim) { a(j * dim + i) = mat(i, j); i += 1 }; j += 1 }
-        a
-      }
-      def unflat(a: Array[Double]) = new DenseMatrix(dim, k, a.clone())
-      val ff = Optimizer.adamLoop(new Array[Double](dim * k), cfg)(
-        wf => {
-          val (l, g, _) = lossGrad(train, unflat(wf), cfg.huberDelta, withGrad = true)
-          (l, flat(g))
-        },
-        wf => lossGrad(valid, unflat(wf), cfg.huberDelta, withGrad = false)._1)
-      Trained(TimeSeries.VarModel(p, dim, unflat(ff.weights)), ff.history,
-        ff.stoppedEarly, ff.bestEpoch, ff.bestValLoss)
-    } finally {
-      train.unpersist(blocking = false)
-      valid.unpersist(blocking = false)
-    }
+    val k = 1 + dim * p
+    def unflat(a: Array[Double]) = new DenseMatrix(dim, k, a.clone())
+    val ff = Optimizer.fit(lagged, new Array[Double](dim * k), dim, cfg)(
+      r => (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray))(
+      wf => {
+        val w = unflat(wf)
+        (s, g) => lossGradSample(w, s._1, s._2, cfg.huberDelta, g)
+      },
+      wf => {
+        val w = unflat(wf)
+        s => lossGradSample(w, s._1, s._2, cfg.huberDelta, Array.emptyDoubleArray)
+      })
+    Trained(TimeSeries.VarModel(p, dim, unflat(ff.weights)), ff.history,
+      ff.stoppedEarly, ff.bestEpoch, ff.bestValLoss)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.Tables
 import graft.functions.DetAgg._
-import graft.ml.{NeuralStub, TimeSeries}
+import graft.ml.{TftNet, TimeSeries}
 
 /** ML / time-series suite (SURVEY §7 step 5, reference `train.py`): the
   * deterministic pieces (split, scaling, sequence windows, metrics) are
@@ -115,6 +115,18 @@ object MlQueries {
     windows
       .repartition(width, col("slice"), col("t"))
       .sortWithinPartitions("slice", "t")
+  }
+
+  /** Fixed-weight forward pass of the full [[TftNet]] stack at the
+    * reference's scaled-down inference widths (7 features, GRN 16, GRU 24,
+    * 4-head attention — `train.py:147-173`), with seeded [[TftNet.init]]
+    * weights, as a per-row UDF over `array<array<double>>` windows. The
+    * weights are derived once on the driver; the UDF closes over them. */
+  private def seededTftUdf() = {
+    val dims = TftNet.Dims(n = 7, g1 = 16, d1 = 24, d2 = 24, heads = 4, g2 = 16, m = 7)
+    val weights = TftNet.init(dims, 11L)
+    udf((hist: Seq[Seq[Double]]) =>
+      TftNet.predict(hist.map(_.toArray).toArray, weights, dims))
   }
 
   /** Shared model-input prep (ml_var_hybrid, ml_train): hourly feature
@@ -351,8 +363,7 @@ object MlQueries {
           element_at(col("y"), i + 1) - col(s"fc_$i")): _*))
       // neural residual prediction over a 12-step residual window (M6/M7)
       val w = Window.partitionBy("slice").orderBy("t")
-      val nnUdf = udf((hist: Seq[Seq[Double]]) =>
-        NeuralStub.forward(hist.map(_.toArray).toArray))
+      val nnUdf = seededTftUdf()
       val withNn = fc
         .withColumn("rhist", collect_list(col("resid")).over(w.rowsBetween(-11, Window.currentRow)))
         .filter(size(col("rhist")) === 12)
@@ -381,8 +392,8 @@ object MlQueries {
     // PAST 12-step residual windows (so the hybrid is a usable 1-step
     // forecast, no target leakage) → hybrid = VAR + trained-GRU residual
     // prediction → RMSE per feature on the test split, against the
-    // VAR-only baseline. ml_var_hybrid above keeps the fixed-weight
-    // NeuralStub (pinning the full GRN/attention stack's inference);
+    // VAR-only baseline. ml_var_hybrid above scores with fixed seeded
+    // TftNet weights (pinning the full GRN/attention stack's inference);
     // this query is the trained counterpart. Same dump-echo property
     // oracle.
     checked("ml_hybrid_trained",
@@ -506,7 +517,7 @@ object MlQueries {
     // sequence windows (batch inference — per-row UDF, no shuffle beyond
     // the window sort). Oracle: dump echo + measured-finite invariant
     // (the forward pass must never emit NaN/Inf on real feature windows —
-    // NeuralStubSpec pins the math, this pins the full-plan composition).
+    // TftNetSpec pins the math, this pins the full-plan composition).
     checked("ml_gru_infer",
       s"""SELECT slice, t,
          |${(0 until TimeSeries.FeatCols.length).map(i => s"  pred_$i").mkString(",\n")},
@@ -514,8 +525,7 @@ object MlQueries {
          |FROM read_parquet('$DumpRoot/ml_gru_infer/*.parquet')""".stripMargin) { (s, d) =>
       val w = Window.partitionBy("slice").orderBy("t")
       val dim = TimeSeries.FeatCols.length
-      val nnUdf = udf((hist: Seq[Seq[Double]]) =>
-        NeuralStub.forward(hist.map(_.toArray).toArray))
+      val nnUdf = seededTftUdf()
       // Per-dimension pred columns (not one array column): the driver's
       // row-sort/hash comparator can't handle array cells.
       val preds = TimeSeries.featureSeries(Tables.events(s, d))

@@ -2,22 +2,20 @@ package graft.sources
 
 import java.io.{BufferedInputStream, DataInputStream, EOFException, InputStream}
 
-import org.apache.spark.input.PortableDataStream
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** PCAP binary source — the reference's custom decode stage rebuilt
   * clean-room from the public libpcap format (reference behavior:
   * `PcapKpiExtractor.scala:59-227`; format: 24-byte global header with
   * endianness magic, 16-byte per-record headers, Ethernet/IPv4/TCP-UDP-ICMP
   * parsing).
   *
-  * Execution shape (reference `:368-381`, kept because it is the idiomatic
-  * Spark route for whole-file binary): `sc.binaryFiles` (one partition per
-  * file) → executor-side `flatMap` decode → `toDF` lifts to Catalyst. All
-  * byte work happens on executors; the driver only lists files. At 100 TB
-  * the same plan holds — binaryFiles partitions by file, so parallelism =
-  * file count and no shuffle occurs until the first keyed aggregate.
+  * This object is the decoder itself ([[decodeStream]] over one file's
+  * bytes, [[parsePacket]] per frame) plus a deterministic pcap writer
+  * ([[synthesize]]). Spark reads pcap files through the DataSource V2
+  * reader `spark.read.format("pcap")` ([[graft.sources.v2.PcapDataSource]]):
+  * one partition per file and executor-side decode — the reference's
+  * `binaryFiles → flatMap` shape (`:368-381`) — so all byte work happens
+  * on executors, the driver only lists files, and no shuffle occurs until
+  * the first keyed aggregate.
   */
 object Pcap {
 
@@ -172,26 +170,11 @@ object Pcap {
     out.iterator
   }
 
-  /** S2+S3: whole-file binary scan → executor-side decode. `slicer` maps a
-    * file path to its slice tag (the reference derives it from the HDFS
-    * directory layout — `:316-339`; default = parent dir name). */
-  def packets(spark: SparkSession, path: String,
-              slicer: String => String = defaultSlicer): RDD[PacketEvent] = {
-    val files = spark.sparkContext.binaryFiles(path)
-    files.flatMap { case (name, pds: PortableDataStream) =>
-      decodeStream(pds.open(), slicer(name), name)
-    }
-  }
-
+  /** Slice tag of a pcap file: its parent directory name (the reference
+    * derives it from the HDFS directory layout — `:316-339`). */
   def defaultSlicer(path: String): String = {
     val parts = path.split("/")
     if (parts.length >= 2) parts(parts.length - 2) else "unknown"
-  }
-
-  /** Lift to Catalyst (reference `:381`). */
-  def packetsDF(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    packets(spark, path).toDF()
   }
 
   // ---------------------------------------------------------------------

@@ -19,17 +19,17 @@ import graft.sources.Pcap
 
 /** DataSource V2 PCAP reader — `spark.read.format("pcap").load(dir)`.
   *
-  * The engine's second route to the reference's custom decode stage
-  * (SURVEY §2.1 S2: "alternative: DataSource V2 custom reader"): the RDD
-  * `binaryFiles → flatMap` path in [[graft.sources.Pcap]] mirrors the
-  * reference's physical shape (`PcapKpiExtractor.scala:368-381`), this one
-  * integrates the same decoder with Catalyst properly:
+  * The engine's file route to the reference's custom decode stage
+  * (SURVEY §2.1 S2: "alternative: DataSource V2 custom reader"): the
+  * reference's `binaryFiles → flatMap` shape
+  * (`PcapKpiExtractor.scala:368-381`) with the decoder in
+  * [[graft.sources.Pcap]] integrated into Catalyst:
   *
   *  - **one InputPartition per file** — parallelism = file count, exactly
   *    the reference's `minPartitions = nFiles` contract (`:369`);
   *  - **column pruning** via SupportsPushDownRequiredColumns — a KPI query
-  *    that needs 5 of the 16 packet fields materializes 5 (the RDD route
-  *    always builds full case-class rows);
+  *    that needs 5 of the 16 packet fields materializes 5 (an RDD of
+  *    case-class rows always builds all 16);
   *  - rows are produced as InternalRow straight from the decode loop — no
   *    RDD, no Scala-object round-trip, no extra copy.
   *

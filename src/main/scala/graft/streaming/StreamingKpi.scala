@@ -194,17 +194,27 @@ object StreamingKpi {
     * First packet of a flow gets IAT = 0.0 (quirk Q4, kept). */
   def iatFlatMap(key: FlowKey, rows: Iterator[FlowEvent],
                  state: GroupState[Double]): Iterator[IatOut] = {
-    val sorted = rows.toSeq.sortBy(e => (e.ts_sec, e.event_id))
-    var last = if (state.exists) Some(state.get) else None
-    val out = sorted.map { e =>
+    val (out, last) = sequenceIat(key, rows,
+      if (state.exists) Some(state.get) else None)
+    last.foreach(state.update)
+    out.iterator
+  }
+
+  /** The IAT body shared by both keyed-state routes: sort one flow's rows
+    * by (ts, event_id) and lag each against the previous ts, starting from
+    * the flow's carried state `last0`; ts and IAT round to 1e-6. Returns
+    * the rows and the flow's new last-seen ts. */
+  private def sequenceIat(key: FlowKey, rows: Iterator[FlowEvent],
+                          last0: Option[Double]): (Seq[IatOut], Option[Double]) = {
+    var last = last0
+    val out = rows.toSeq.sortBy(e => (e.ts_sec, e.event_id)).map { e =>
       val iat = last.map(e.ts_sec - _).getOrElse(0.0)
       last = Some(e.ts_sec)
       IatOut(e.event_id, key.slice, key.flow,
         math.floor(e.ts_sec * 1e6 + 0.5) / 1e6,
         math.floor(iat * 1e6 + 0.5) / 1e6)
     }
-    if (last.isDefined) state.update(last.get)
-    out.iterator
+    (out, last)
   }
 
   /** Streaming per-flow IAT dataset (call on a streaming events frame). */
@@ -242,15 +252,8 @@ object StreamingKpi {
 
     override def handleInputRows(key: FlowKey, rows: Iterator[FlowEvent],
         timerValues: TimerValues): Iterator[IatOut] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts_sec, e.event_id))
-      var last = if (lastTs.exists()) Some(lastTs.get()) else None
-      val out = sorted.map { e =>
-        val iat = last.map(e.ts_sec - _).getOrElse(0.0)
-        last = Some(e.ts_sec)
-        IatOut(e.event_id, key.slice, key.flow,
-          math.floor(e.ts_sec * 1e6 + 0.5) / 1e6,
-          math.floor(iat * 1e6 + 0.5) / 1e6)
-      }
+      val (out, last) = sequenceIat(key, rows,
+        if (lastTs.exists()) Some(lastTs.get()) else None)
       last.foreach(lastTs.update)
       out.iterator
     }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Pcap
 
-/** DataSource V2 pcap reader spec: agreement with the RDD route, per-file
-  * partitioning, column pruning, options, resilience. */
+/** DataSource V2 pcap reader spec: agreement with the decoder run on the
+  * driver, per-file partitioning, column pruning, options, resilience. */
 class PcapV2Spec extends SparkSpec {
 
   private def writeCorpus(): String = {
@@ -22,15 +22,21 @@ class PcapV2Spec extends SparkSpec {
     root
   }
 
-  test("v2 reader agrees row-for-row with the RDD binaryFiles route") {
+  test("v2 reader agrees row-for-row with decodeStream run on the driver") {
     val root = writeCorpus()
     val v2 = spark.read.format("pcap").load(root + "/eMBB")
       .union(spark.read.format("pcap").load(root + "/URLLC"))
-    val rdd = Pcap.packetsDF(spark, root + "/*/*.pcap")
+    val driver = Seq("eMBB", "URLLC").flatMap { slice =>
+      val f = Paths.get(root, slice, s"cap_$slice.pcap")
+      Pcap.decodeStream(Files.newInputStream(f), slice, f.toString)
+    }
     // fileName formats differ (file:/ URI vs raw path) — compare the rest.
-    val cols = PcapCols.filterNot(_ == "fileName").map(col)
-    val a = v2.select(cols: _*).collect().map(_.toSeq).toSet
-    val b = rdd.select(cols: _*).collect().map(_.toSeq).toSet
+    val cols = PcapCols.filterNot(_ == "fileName")
+    val a = v2.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    val b = driver.map { p =>
+      val byName = p.productElementNames.zip(p.productIterator).toMap
+      cols.map(byName)
+    }.toSet
     assert(a == b && a.size == 40)
   }
 

@@ -115,4 +115,61 @@ class TftNetSpec extends SparkSpec {
     assert(a.history == b.history, "two fits over the same frame must be bit-identical")
     assert(a.weights.sameElements(b.weights))
   }
+
+  // ---- fixed-weight inference at the hybrid queries' widths ------------
+  // Checked through weight-independent structural properties (permutation
+  // equivariance, the convex-combination fixed point) rather than pinned
+  // output values.
+
+  private val inferDims = TftNet.Dims(n = 7, g1 = 16, d1 = 24, d2 = 24,
+    heads = 4, g2 = 16, m = 7)
+
+  private def gaussSeq(steps: Int, d: Int, seed: Int): Array[Array[Double]] = {
+    val r = new scala.util.Random(seed)
+    Array.fill(steps, d)(r.nextGaussian())
+  }
+
+  test("inference forward is deterministic and returns 7 finite outputs") {
+    val w = TftNet.init(inferDims, 11L)
+    val x = gaussSeq(12, inferDims.n, 7)
+    val a = TftNet.predict(x, w, inferDims)
+    val b = TftNet.predict(x.map(_.clone()), TftNet.init(inferDims, 11L), inferDims)
+    assert(a.length == 7)
+    assert(a.toSeq == b.toSeq)
+    assert(a.forall(v => !v.isNaN && !v.isInfinite))
+  }
+
+  test("attention uses 4 heads and keeps the sequence shape") {
+    assert(inferDims.heads == 4 && inferDims.kd * 4 == inferDims.d2)
+    val out = TftNet.attForward(gaussSeq(9, inferDims.d2, 13),
+      TftNet.init(inferDims, 11L), inferDims).y
+    assert(out.length == 9)
+    assert(out.forall(_.length == inferDims.d2))
+    assert(out.flatten.forall(v => !v.isNaN && !v.isInfinite))
+  }
+
+  test("attention is permutation-equivariant (no positional encoding)") {
+    // Random biases too: they are per-position constants, so equivariance
+    // must hold for any weights.
+    val r = rnd(3)
+    val w = TftNet.init(inferDims, 11L).map(_ + r.nextGaussian() * 0.1)
+    val s = gaussSeq(9, inferDims.d2, 13)
+    val out = TftNet.attForward(s, w, inferDims).y
+    val perm = Array(4, 2, 7, 0, 8, 1, 6, 3, 5)
+    val out2 = TftNet.attForward(perm.map(s), w, inferDims).y
+    perm.zipWithIndex.foreach { case (src, i) =>
+      assert(out2(i).zip(out(src)).forall { case (x, y) => math.abs(x - y) < 1e-12 },
+        s"row $i should equal unpermuted row $src")
+    }
+  }
+
+  test("attention over a constant sequence returns identical rows") {
+    // Softmax weights form a convex combination; equal V rows are a fixed
+    // point regardless of head count or projections.
+    val row = Array.tabulate(inferDims.d2)(i => math.sin(i + 1.0))
+    val s = Array.fill(5)(row.clone())
+    val out = TftNet.attForward(s, TftNet.init(inferDims, 11L), inferDims).y
+    out.foreach(r => assert(
+      r.zip(out(0)).forall { case (x, y) => math.abs(x - y) < 1e-12 }))
+  }
 }

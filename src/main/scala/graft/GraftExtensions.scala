@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
 
-import graft.functions.expr.{CosTopK, DotLong, FreqSketch, KmvSketch, ShingleExplode}
+import graft.functions.expr.{CosTopK, DotLong, ExactDistinct, FreqSketch, KmvSketch, ShingleExplode}
 
 /** SQL-surface registration for the engine's native Catalyst expressions
   * (SURVEY §4.3 path (c): `SparkSessionExtensions`). Column-API users get
@@ -18,6 +18,7 @@ import graft.functions.expr.{CosTopK, DotLong, FreqSketch, KmvSketch, ShingleExp
   *  - `cos_top_k(score, id, k)`    bounded-heap per-group top-k aggregate
   *  - `freq_sketch(item, k)`       Misra-Gries frequent-items aggregate
   *  - `kmv_sketch(hash, k)`        K-Minimum-Values (theta) distinct sketch
+  *  - `exact_count_distinct(x)`    exact `count(DISTINCT x)` without Expand
   *  - `morton2(a, b)`              Z-order key of two 21-bit dimensions
   *                                 (expands to the codegen'd bit-op tree)
   *
@@ -101,6 +102,12 @@ object GraftExtensions {
             Cast(hash, org.apache.spark.sql.types.LongType),
             intArg(k, "kmv_sketch", 2))
           case _ => throw new IllegalArgumentException("kmv_sketch(hash, k)")
+        }),
+      "exact_count_distinct" -> (
+        new ExpressionInfo(classOf[ExactDistinct].getName, "exact_count_distinct"),
+        (args: Seq[Expression]) => args match {
+          case Seq(x) => ExactDistinct(x)
+          case _ => throw new IllegalArgumentException("exact_count_distinct(x)")
         }),
       "asof_backward" -> (
         new ExpressionInfo(classOf[graft.plans.AsOfMark].getName, "asof_backward"),

@@ -1,8 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.classic.GraftExpressionBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+
+import graft.functions.expr.ExactDistinct
 
 /** Deterministic, cross-engine-reproducible aggregates.
   *
@@ -107,6 +110,15 @@ object DetAgg {
     r6(percentile(c, lit(p)))
 
   def dmedian(c: Column): Column = dpercentile(c, 0.5)
+
+  /** Exact `count(DISTINCT c)` as one aggregate, never an Expand
+    * ([[ExactDistinct]]): BIGINT, nulls ignored,
+    * `-0.0` = `0.0`, all NaNs one value. The DuckDB twin stays
+    * `count(DISTINCT c)`; `exact_count_distinct(c)` is its Spark-SQL
+    * spelling. */
+  def dcountDistinct(c: Column): Column =
+    GraftExpressionBridge.column(
+      ExactDistinct(GraftExpressionBridge.expression(c)).toAggregateExpression())
 
   def dround(c: Column): Column = r6(c)
 

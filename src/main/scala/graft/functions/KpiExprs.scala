@@ -17,11 +17,15 @@ import org.apache.spark.sql.functions._
   * Inputs are a canonical "packet view" with columns
   * `slice, flow, ts_sec (epoch seconds, double), len, proto, src_port,
   * dst_port, win_size, flags, seq, iat` — the events table is mapped onto
-  * this view by [[graft.operators.FlowOps]]. All aggregates are plain
-  * Catalyst built-ins: one hash-aggregate pass, map-side partials, AQE-safe
-  * at any scale. The four `count_distinct`s trigger Expand-based distinct
-  * planning exactly as in the reference; 100 TB variants would swap them to
-  * `approx_count_distinct` (documented, not oracle-checked).
+  * this view by [[graft.operators.FlowOps]]. All aggregates run in one
+  * hash-aggregate pass with map-side partials, AQE-safe at any scale. The
+  * five exact distinct counts (the four `Unique_*`/`Protocol_Diversity`
+  * KPIs and the `count(DISTINCT seq)` inside `Retransmission_Ratio`) go
+  * through [[DetAgg.dcountDistinct]], so none of them makes Catalyst plan
+  * an Expand (which copied every packet six times through the decimal
+  * sums); their DuckDB twins stay `count(DISTINCT …)`. 100 TB variants
+  * would swap them to `approx_count_distinct` (documented, not
+  * oracle-checked).
   */
 object KpiExprs {
   // Reference operating constants (KafkaKpiPipeline.scala:25-28). The
@@ -38,7 +42,7 @@ object KpiExprs {
   /** Spark-SQL spelling of a [[Kpi.duck]] expression — the parser-route
     * twin. The deterministic arithmetic (exact-decimal power sums, the
     * floor-rounding grid, CASE counting) is dialect-portable verbatim;
-    * exactly three spellings differ and are substituted here. Kept in
+    * exactly four spellings differ and are substituted here. Kept in
     * lockstep with [[graft.functions.DetAgg]]'s sql* builders:
     *  - bare `VARCHAR` needs a length in Spark → `STRING` (same exact
     *    decimal→string→double hop);
@@ -46,7 +50,11 @@ object KpiExprs {
     *    interpolation);
     *  - DuckDB `entropy` = the engine's registered `shannon_entropy`
     *    UDAF ([[graft.GraftExtensions.register]]) — this is the one KPI
-    *    that exercises the UDF-registry route from SQL text. */
+    *    that exercises the UDF-registry route from SQL text;
+    *  - DuckDB `count(DISTINCT col)` = the engine's registered
+    *    `exact_count_distinct(col)` ([[DetAgg.dcountDistinct]]), so the
+    *    parser route plans the same Expand-free aggregate as the Column
+    *    route. */
   def sparkSqlOf(duck: String): String =
     duck
       // anchored on non-identifier boundaries (ADVICE r11): a future KPI
@@ -55,6 +63,8 @@ object KpiExprs {
       .replaceAll("""\bAS VARCHAR\)""", "AS STRING)")
       .replaceAll("""(?<![A-Za-z0-9_])quantile_cont\(""", "percentile(")
       .replaceAll("""(?<![A-Za-z0-9_])entropy\(""", "shannon_entropy(")
+      .replaceAll("""(?<![A-Za-z0-9_])count\(DISTINCT ([A-Za-z_][A-Za-z0-9_]*)\)""",
+        "exact_count_distinct($1)")
 
   import DetAgg._
 
@@ -135,7 +145,7 @@ object KpiExprs {
         sqlGuard1("len", sqlKurtosis("len"))),
       Kpi("Min_Pkt_Size", dround(min(len)), sqlR6("min(len)")),
       Kpi("Max_Pkt_Size", dround(max(len)), sqlR6("max(len)")),
-      Kpi("Unique_Pkt_Sizes", count_distinct(len), "count(DISTINCT len)"),
+      Kpi("Unique_Pkt_Sizes", dcountDistinct(len), "count(DISTINCT len)"),
       Kpi("Small_Pkt_Ratio",
         dround(cwhen(len < smallLen) / cnt),
         sqlR6(s"${sqlCwhen(s"len < $smallLen")} / count(*)")),
@@ -149,9 +159,9 @@ object KpiExprs {
       Kpi("UDP_Ratio",
         dround(cwhen(col("proto") === "UDP") / cnt),
         sqlR6(s"${sqlCwhen("proto = 'UDP'")} / count(*)")),
-      Kpi("Protocol_Diversity", count_distinct(col("proto")),
+      Kpi("Protocol_Diversity", dcountDistinct(col("proto")),
         "count(DISTINCT proto)"),
-      Kpi("Unique_Src_Ports", count_distinct(col("src_port")),
+      Kpi("Unique_Src_Ports", dcountDistinct(col("src_port")),
         "count(DISTINCT src_port)"),
       // -- tcp health (:152-158)
       Kpi("Avg_Win_Size", davg(col("win_size")), sqlAvg("win_size")),
@@ -164,7 +174,7 @@ object KpiExprs {
       Kpi("RST_Count", cwhen(col("flags").bitwiseAND(lit(0x04)) =!= 0),
         sqlCwhen("(flags & 4) <> 0")),
       // -- flow (:163-164)
-      Kpi("Unique_Dst_Ports", count_distinct(col("dst_port")),
+      Kpi("Unique_Dst_Ports", dcountDistinct(col("dst_port")),
         "count(DISTINCT dst_port)"),
       Kpi("Coeff_Variation_Size",
         dround(guard1(count(len), stddevRaw(len) / (avgRaw(len) + lit(Eps)))),
@@ -172,7 +182,7 @@ object KpiExprs {
       // -- Q7 gap-closers (train.py:57,59 consume these; pipeline never
       //    produced them — we do)
       Kpi("Retransmission_Ratio",
-        dround((cnt - count_distinct(col("seq"))) / cnt),
+        dround((cnt - dcountDistinct(col("seq"))) / cnt),
         sqlR6("(count(*) - count(DISTINCT seq)) / count(*)")),
       Kpi("Entropy_Score",
         dround(ShannonEntropy.ofLong(col("seq"))),

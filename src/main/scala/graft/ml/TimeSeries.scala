@@ -35,7 +35,7 @@ object TimeSeries {
         (dsumRaw(col("value")) / count(lit(1))).as("f_avg"),
         min(col("value")).as("f_min"),
         max(col("value")).as("f_max"),
-        count_distinct(col("user_id")).cast("double").as("f_users"),
+        dcountDistinct(col("user_id")).cast("double").as("f_users"),
         dsumRaw(graft.functions.JsonFns.jsonInt(col("props"), "k")).as("f_ksum"))
 
   val FeatCols: Seq[String] =

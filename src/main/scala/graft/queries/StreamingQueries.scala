@@ -218,13 +218,10 @@ object StreamingQueries {
         val realFile = new java.io.File(streamDir, "real.parquet")
         val (raw, maxNs) = canonicalEvents(s, d)
         writeCanonical(raw, realFile)
-        // Isolated child session (the runBounded contract): conf copied,
-        // narrow shuffle width for the tiny streaming state.
-        val s2 = s.newSession()
-        s.conf.getAll.foreach { case (k, v) =>
-          try s2.conf.set(k, v) catch { case _: Exception => () }
-        }
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
+        // Isolated child session (the runBounded contract); both
+        // incarnations plan in it, and the second reuses the
+        // checkpoint's partition count anyway.
+        val s2 = StreamingKpi.childSession(s)
         def incarnation() = windowedKpi(sentinelStream(s2, streamDir), "tumbling")
           .writeStream.format("parquet")
           .option("path", outPath).option("checkpointLocation", ckpt)
@@ -271,11 +268,7 @@ object StreamingQueries {
         root.mkdirs()
         val outPath = new java.io.File(root, "out").getAbsolutePath
         val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
-        val s2 = s.newSession()
-        s.conf.getAll.foreach { case (k, v) =>
-          try s2.conf.set(k, v) catch { case _: Exception => () }
-        }
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
+        val s2 = StreamingKpi.childSession(s)
         val q = windowedKpi(sentinelStream(s2, dir), "tumbling")
           .writeStream.format("parquet")
           .option("path", outPath).option("checkpointLocation", ckpt)
@@ -589,11 +582,7 @@ object StreamingQueries {
         rmTree(root)
         root.mkdirs()
         val store = new java.io.File(root, "store")
-        val s2 = s.newSession()
-        s.conf.getAll.foreach { case (k, v) =>
-          try s2.conf.set(k, v) catch { case _: Exception => () }
-        }
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
+        val s2 = StreamingKpi.childSession(s)
         val q = windowedKpi(sentinelStream(s2, dir), "tumbling")
           .writeStream
           .option("checkpointLocation",

@@ -107,22 +107,45 @@ object StreamingKpi {
     }
   }
 
+  /** An isolated child session for one streamed drain: `newSession()`
+    * shares the SparkContext but gets its own SQLConf, so a setting that
+    * binds at query start cannot race with a query started concurrently on
+    * the caller's session. The caller's runtime-modifiable conf (e.g. a
+    * state-store-provider override) is carried over, since `newSession`
+    * starts from builder-time defaults; static and non-SQL keys are not
+    * settable on a live session and are left out.
+    *
+    * State partitions (`spark.sql.shuffle.partitions`, which fixes the
+    * stateful operators' partition count) are set to the context's
+    * `defaultParallelism`, capped at 8: stateful queries pay a
+    * per-state-partition constant every micro-batch (store commit +
+    * snapshot + task), so below 8 task slots one partition per slot runs
+    * those commits in one wave (4 rather than 8 at local[4] halves the
+    * state-commit time of the bounded drains), and from 8 slots on the
+    * bounded drains keep 8 (half the drain time of 32 at local[32] and
+    * sf0.1 state sizes). Results do not depend on the count: the streamed
+    * aggregates are exact-decimal and the keyed state is per key. A query
+    * restarted from an existing checkpoint keeps the partition count the
+    * checkpoint was written with, whatever this session says. Unbounded
+    * production runs should size state partitions to state volume, not
+    * cores. */
+  private[graft] def childSession(spark: SparkSession): SparkSession = {
+    val s2 = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) s2.conf.set(k, v)
+    }
+    s2.conf.set("spark.sql.shuffle.partitions",
+      math.min(8, spark.sparkContext.defaultParallelism).toString)
+    s2
+  }
+
   /** Run a bounded streaming query into a memory sink and return the result
     * table. Complete mode for aggregations (every window in the final
     * table), Append for stateful flatMap output.
     *
-    * The stream is BUILT (via `build`) and run in an isolated child session:
-    * stateful queries pay a per-state-partition constant every micro-batch
-    * (store commit + snapshot + task), so the bounded drain wants 8 state
-    * partitions (halves these drains vs 32 at sf0.1 state sizes, with
-    * bit-identical results — all aggregates are partition-invariant by
-    * construction), and that setting binds from the session conf at query
-    * start. Mutating the shared session would race with any concurrently
-    * started query; `newSession()` shares the SparkContext but isolates the
-    * SQLConf. Parent runtime conf (e.g. a state-store-provider override) is
-    * carried over, since `newSession` starts from builder-time defaults.
-    * Unbounded production runs should size state partitions to state
-    * volume, not cores. */
+    * The stream is BUILT (via `build`) and run in an isolated
+    * [[childSession]], with one state partition per task slot up to 8
+    * (see there for why, and for unbounded runs). */
   def runBounded(spark: SparkSession, build: SparkSession => DataFrame,
                  name: String, mode: OutputMode,
                  extraConf: Map[String, String] = Map.empty): DataFrame =
@@ -136,12 +159,7 @@ object StreamingKpi {
       spark: SparkSession, build: SparkSession => DataFrame,
       name: String, mode: OutputMode,
       extraConf: Map[String, String] = Map.empty): (DataFrame, Seq[BatchProgress]) = {
-    val s2 = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      // Static/read-only entries can't be set on a live session — skip.
-      try s2.conf.set(k, v) catch { case _: Exception => () }
-    }
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val s2 = childSession(spark)
     extraConf.foreach { case (k, v) => s2.conf.set(k, v) }
     // T7 telemetry: registered before start so batch 0 is captured.
     val progressLog = new ProgressLog

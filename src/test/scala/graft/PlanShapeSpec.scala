@@ -730,6 +730,16 @@ class PlanShapeSpec extends SparkSpec {
       "exactly one window pass (the per-flow lag IAT) feeds the KPI aggregate"))
   }
 
+  test("exact distinct counts plan no Expand: KPI table (both routes) and featureSeries") {
+    Seq("kpi_full_day", "sql_kpi_full_day", "ml_split_scale").foreach { name =>
+      val p = planFormatted(name)
+      assert(p.contains("exact_count_distinct"),
+        s"$name must count distinct values through exact_count_distinct; got:\n$p")
+      assert(!p.contains("Expand"),
+        s"$name must not copy its input rows through an Expand; got:\n$p")
+    }
+  }
+
   test("sql_flow_iat: parser route plans the one-shuffle lag window") {
     val sqlP = plan("sql_flow_iat")
     val dslP = plan("flow_iat")

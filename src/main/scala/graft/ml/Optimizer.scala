@@ -112,7 +112,11 @@ object Optimizer {
     (loss / denom, grad)
   }
 
-  /** Run the Adam + callback loop from `init`.
+  /** Run the Adam + callback loop from `init`. A non-finite train loss,
+    * gradient entry or validation loss fails the fit with an
+    * IllegalStateException naming the epoch: a NaN never improves the best
+    * validation loss, so the loop would otherwise quietly return the
+    * best-so-far (possibly initial) weights.
     *
     * @param trainLossGrad mean loss and its gradient at the given weights
     *                      (one distributed pass)
@@ -124,6 +128,7 @@ object Optimizer {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    import java.lang.Double.isFinite
     val k = init.length
     var w = init.clone()
     val m = new Array[Double](k)
@@ -157,6 +162,9 @@ object Optimizer {
     while (epoch <= cfg.maxEpochs && !stopped) {
       val (trainLoss, grad) = Await.result(gradFut, Duration.Inf)
       gradFut = null
+      if (!isFinite(trainLoss) || !grad.forall(isFinite(_)))
+        throw new IllegalStateException(
+          s"non-finite train loss or gradient at epoch $epoch (loss $trainLoss)")
       // Adam (bias-corrected), t = epoch.
       val bc1 = 1 - math.pow(cfg.beta1, epoch)
       val bc2 = 1 - math.pow(cfg.beta2, epoch)
@@ -172,6 +180,8 @@ object Optimizer {
       val wSnap = w // w is only ever REPLACED, never mutated in place
       if (epoch < cfg.maxEpochs) gradFut = Future(trainLossGrad(wSnap))
       val vl = valLoss(w)
+      if (!isFinite(vl))
+        throw new IllegalStateException(s"non-finite validation loss at epoch $epoch ($vl)")
       history += Trainer.EpochLog(epoch, trainLoss, vl, lr)
       if (vl < bestVal - cfg.minDelta) {
         bestVal = vl; best = w.clone(); bestEpoch = epoch

@@ -2,6 +2,8 @@ package graft.ml
 
 import org.apache.spark.sql.DataFrame
 
+import Layers.{GruCache, GruOffs, gruBackward, gruForward, mtv, mv, outer, sigmoid}
+
 /** The reference's FULL hybrid architecture, trainable end-to-end with
   * EXACT analytic backpropagation (`train.py:115-173`):
   *
@@ -12,9 +14,12 @@ import org.apache.spark.sql.DataFrame
   * [[GruNet]] closed the recurrence; this module closes the rest of the
   * stack — the GRN's ELU/GLU-gate/skip/LayerNorm chain, scaled-dot
   * softmax attention across all four heads, and the learnable LayerNorm
-  * scale/offset the Keras layers carry. Every partial derivative is
-  * derived by hand and pinned against central finite differences in
-  * TftNetSpec, the same contract GruNetSpec established.
+  * scale/offset the Keras layers carry. Both GRU layers, the flat-array
+  * kernels and the seeded init are the shared [[Layers]] object that
+  * [[GruNet]] runs too; GRN, attention and LayerNorm live here. Every
+  * partial derivative is derived by hand and pinned against central
+  * finite differences in TftNetSpec, the same contract GruNetSpec
+  * established, and bit for bit in NetBitsSpec.
   *
   * Faithfulness notes: the GRN gate reads the layer INPUT (`train.py:133`:
   * `x_val * self.gate(x)`), and both GRU layers of the reference are
@@ -31,10 +36,6 @@ import org.apache.spark.sql.DataFrame
   * callbacks); this module supplies only the per-sample loss and gradient.
   */
 object TftNet {
-
-  /** Offsets of one GRU layer's nine parameter blocks in the flat vector. */
-  final case class GruOffs(wz: Int, uz: Int, bz: Int, wr: Int, ur: Int, br: Int,
-                           wh: Int, uh: Int, bh: Int, nIn: Int, d: Int)
 
   /** Offsets of one GRN's blocks; `ws`/`bs` are -1 when the skip is the
     * identity (input width == output width, `train.py:126-130`). */
@@ -60,10 +61,9 @@ object TftNet {
       val bs = if (nIn == dOut) -1 else alloc(dOut)
       GrnOffs(w1, b1, w2, b2, wg, bg, ws, bs, alloc(dOut), alloc(dOut), nIn, dOut)
     }
-    private def allocGru(nIn: Int, d: Int): GruOffs =
-      GruOffs(alloc(d * nIn), alloc(d * d), alloc(d),
-        alloc(d * nIn), alloc(d * d), alloc(d),
-        alloc(d * nIn), alloc(d * d), alloc(d), nIn, d)
+    private def allocGru(nIn: Int, d: Int): GruOffs = {
+      val o = GruOffs.at(acc, nIn, d); acc = o.end; o
+    }
 
     val oGrn1: GrnOffs = allocGrn(n, g1)
     val oGru1: GruOffs = allocGru(g1, d1)
@@ -79,80 +79,28 @@ object TftNet {
     val size: Int = acc
   }
 
-  /** Deterministic seeded init: matrices hash-uniform in ±0.5/√fanIn
-    * (GruNet's scheme), LayerNorm scales 1, biases and offsets 0. */
+  /** Deterministic seeded init ([[Layers.Filler]], one salt per matrix
+    * block in layout order): LayerNorm scales 1, biases and offsets 0. */
   def init(dims: Dims, seed: Long): Array[Double] = {
-    val a = new Array[Double](dims.size)
-    var salt = 0L
-    def fill(off: Int, rows: Int, cols: Int): Unit = {
-      salt += 1 // advance even for skipped identity-skip blocks: layout-stable
-      if (off >= 0) {
-        var i = 0
-        while (i < rows * cols) {
-          var h = seed * 6364136223846793005L + salt * 0x9e3779b97f4a7c15L +
-            i + 1442695040888963407L
-          h ^= h >>> 33; h *= 0xff51afd7ed558ccdL; h ^= h >>> 33
-          a(off + i) = ((h >>> 11).toDouble / (1L << 53).toDouble - 0.5) / math.sqrt(cols)
-          i += 1
-        }
-      }
-    }
+    val f = new Layers.Filler(new Array[Double](dims.size), seed)
+    val a = f.a
     def fillGrn(o: GrnOffs): Unit = {
-      fill(o.w1, o.dOut, o.nIn); fill(o.w2, o.dOut, o.dOut)
-      fill(o.wg, o.dOut, o.nIn); fill(o.ws, o.dOut, o.nIn)
+      f.fill(o.w1, o.dOut, o.nIn); f.fill(o.w2, o.dOut, o.dOut)
+      f.fill(o.wg, o.dOut, o.nIn); f.fill(o.ws, o.dOut, o.nIn)
       var i = 0; while (i < o.dOut) { a(o.gam + i) = 1.0; i += 1 }
     }
-    def fillGru(o: GruOffs): Unit = {
-      fill(o.wz, o.d, o.nIn); fill(o.uz, o.d, o.d)
-      fill(o.wr, o.d, o.nIn); fill(o.ur, o.d, o.d)
-      fill(o.wh, o.d, o.nIn); fill(o.uh, o.d, o.d)
-    }
     fillGrn(dims.oGrn1)
-    fillGru(dims.oGru1); fillGru(dims.oGru2)
-    fill(dims.aWq, dims.heads * dims.kd, dims.d2)
-    fill(dims.aWk, dims.heads * dims.kd, dims.d2)
-    fill(dims.aWv, dims.heads * dims.kd, dims.d2)
-    fill(dims.aWo, dims.d2, dims.heads * dims.kd)
+    f.gru(dims.oGru1); f.gru(dims.oGru2)
+    f.fill(dims.aWq, dims.heads * dims.kd, dims.d2)
+    f.fill(dims.aWk, dims.heads * dims.kd, dims.d2)
+    f.fill(dims.aWv, dims.heads * dims.kd, dims.d2)
+    f.fill(dims.aWo, dims.d2, dims.heads * dims.kd)
     var i = 0; while (i < dims.d2) { a(dims.lnGam + i) = 1.0; i += 1 }
     fillGrn(dims.oGrn2)
-    fill(dims.hW, dims.m, dims.g2)
+    f.fill(dims.hW, dims.m, dims.g2)
     a
   }
 
-  // ---- flat-array linear algebra -----------------------------------------
-
-  private def mv(w: Array[Double], off: Int, rows: Int, cols: Int,
-                 v: Array[Double], out: Array[Double]): Unit = {
-    var i = 0
-    while (i < rows) {
-      var s = 0.0; var j = 0
-      while (j < cols) { s += w(off + i * cols + j) * v(j); j += 1 }
-      out(i) += s
-      i += 1
-    }
-  }
-
-  private def mtv(w: Array[Double], off: Int, rows: Int, cols: Int,
-                  v: Array[Double], out: Array[Double]): Unit = {
-    var i = 0
-    while (i < rows) {
-      val vi = v(i); var j = 0
-      while (j < cols) { out(j) += w(off + i * cols + j) * vi; j += 1 }
-      i += 1
-    }
-  }
-
-  private def outerAcc(g: Array[Double], off: Int, rows: Int, cols: Int,
-                       a: Array[Double], b: Array[Double]): Unit = {
-    var i = 0
-    while (i < rows) {
-      val ai = a(i); var j = 0
-      while (j < cols) { g(off + i * cols + j) += ai * b(j); j += 1 }
-      i += 1
-    }
-  }
-
-  private def sigmoid(x: Double) = 1.0 / (1.0 + math.exp(-x))
   private def elu(x: Double) = if (x >= 0) x else math.exp(x) - 1
 
   // ---- LayerNorm with learnable scale/offset -----------------------------
@@ -242,7 +190,7 @@ object TftNet {
     val dsum = lnBackward(dy, c.xhat, c.sig, w, o.gam, o.bet, grad)
     val dx = new Array[Double](o.nIn)
     if (o.proj) {
-      outerAcc(grad, o.ws, dOut, o.nIn, dsum, c.x)
+      outer(grad, o.ws, dOut, o.nIn, dsum, c.x)
       var i = 0; while (i < dOut) { grad(o.bs + i) += dsum(i); i += 1 }
       mtv(w, o.ws, dOut, o.nIn, dsum, dx)
     } else {
@@ -256,10 +204,10 @@ object TftNet {
       dgp(i) = dsum(i) * c.a(i) * c.gate(i) * (1 - c.gate(i))
       i += 1
     }
-    outerAcc(grad, o.wg, dOut, o.nIn, dgp, c.x)
+    outer(grad, o.wg, dOut, o.nIn, dgp, c.x)
     i = 0; while (i < dOut) { grad(o.bg + i) += dgp(i); i += 1 }
     mtv(w, o.wg, dOut, o.nIn, dgp, dx)
-    outerAcc(grad, o.w2, dOut, dOut, da, c.h)
+    outer(grad, o.w2, dOut, dOut, da, c.h)
     i = 0; while (i < dOut) { grad(o.b2 + i) += da(i); i += 1 }
     val dh = new Array[Double](dOut)
     mtv(w, o.w2, dOut, dOut, da, dh)
@@ -270,115 +218,10 @@ object TftNet {
       dq(i) = dh(i) * (if (c.q(i) >= 0) 1.0 else c.h(i) + 1.0)
       i += 1
     }
-    outerAcc(grad, o.w1, dOut, o.nIn, dq, c.x)
+    outer(grad, o.w1, dOut, o.nIn, dq, c.x)
     i = 0; while (i < dOut) { grad(o.b1 + i) += dq(i); i += 1 }
     mtv(w, o.w1, dOut, o.nIn, dq, dx)
     dx
-  }
-
-  // ---- GRU layer (same cell as GruNet, offset-parameterized, with dX) ----
-
-  private final class GruCache(val zs: Array[Array[Double]], val rs: Array[Array[Double]],
-                               val cs: Array[Array[Double]], val hs: Array[Array[Double]])
-
-  private def gruForward(seq: Array[Array[Double]], w: Array[Double],
-                         o: GruOffs): GruCache = {
-    val T = seq.length
-    val d = o.d
-    val zs = new Array[Array[Double]](T)
-    val rs = new Array[Array[Double]](T)
-    val cs = new Array[Array[Double]](T)
-    val hs = new Array[Array[Double]](T + 1)
-    hs(0) = new Array[Double](d)
-    var t = 0
-    while (t < T) {
-      val x = seq(t); val hp = hs(t)
-      val z = new Array[Double](d); val r = new Array[Double](d)
-      val c = new Array[Double](d)
-      mv(w, o.wz, d, o.nIn, x, z); mv(w, o.uz, d, d, hp, z)
-      mv(w, o.wr, d, o.nIn, x, r); mv(w, o.ur, d, d, hp, r)
-      var i = 0
-      while (i < d) {
-        z(i) = sigmoid(z(i) + w(o.bz + i))
-        r(i) = sigmoid(r(i) + w(o.br + i))
-        i += 1
-      }
-      val hr = new Array[Double](d)
-      i = 0; while (i < d) { hr(i) = hp(i) * r(i); i += 1 }
-      mv(w, o.wh, d, o.nIn, x, c); mv(w, o.uh, d, d, hr, c)
-      val h = new Array[Double](d)
-      i = 0
-      while (i < d) {
-        c(i) = math.tanh(c(i) + w(o.bh + i))
-        h(i) = (1 - z(i)) * hp(i) + z(i) * c(i)
-        i += 1
-      }
-      zs(t) = z; rs(t) = r; cs(t) = c; hs(t + 1) = h
-      t += 1
-    }
-    new GruCache(zs, rs, cs, hs)
-  }
-
-  /** BPTT with a per-step external gradient `dOut` (return_sequences=True:
-    * every hidden state feeds the next layer); returns d loss/d input per
-    * step so the gradient keeps flowing to the layer below. */
-  private def gruBackward(seq: Array[Array[Double]], cache: GruCache,
-                          w: Array[Double], o: GruOffs,
-                          dOut: Array[Array[Double]],
-                          grad: Array[Double]): Array[Array[Double]] = {
-    val T = seq.length
-    val d = o.d
-    val dSeq = new Array[Array[Double]](T)
-    var dhNext = new Array[Double](d)
-    var t = T - 1
-    while (t >= 0) {
-      val x = seq(t); val hp = cache.hs(t)
-      val z = cache.zs(t); val r = cache.rs(t); val c = cache.cs(t)
-      val g = new Array[Double](d)
-      var i = 0; while (i < d) { g(i) = dhNext(i) + dOut(t)(i); i += 1 }
-      val dz = new Array[Double](d); val dc = new Array[Double](d)
-      i = 0
-      while (i < d) {
-        dz(i) = g(i) * (c(i) - hp(i)) * z(i) * (1 - z(i))
-        dc(i) = g(i) * z(i) * (1 - c(i) * c(i))
-        i += 1
-      }
-      val hr = new Array[Double](d)
-      i = 0; while (i < d) { hr(i) = hp(i) * r(i); i += 1 }
-      outerAcc(grad, o.wh, d, o.nIn, dc, x)
-      outerAcc(grad, o.uh, d, d, dc, hr)
-      i = 0; while (i < d) { grad(o.bh + i) += dc(i); i += 1 }
-      val dhr = new Array[Double](d)
-      mtv(w, o.uh, d, d, dc, dhr)
-      val dr = new Array[Double](d)
-      i = 0
-      while (i < d) {
-        dr(i) = dhr(i) * hp(i) * r(i) * (1 - r(i))
-        i += 1
-      }
-      outerAcc(grad, o.wz, d, o.nIn, dz, x)
-      outerAcc(grad, o.uz, d, d, dz, hp)
-      i = 0; while (i < d) { grad(o.bz + i) += dz(i); i += 1 }
-      outerAcc(grad, o.wr, d, o.nIn, dr, x)
-      outerAcc(grad, o.ur, d, d, dr, hp)
-      i = 0; while (i < d) { grad(o.br + i) += dr(i); i += 1 }
-      val dx = new Array[Double](o.nIn)
-      mtv(w, o.wz, d, o.nIn, dz, dx)
-      mtv(w, o.wr, d, o.nIn, dr, dx)
-      mtv(w, o.wh, d, o.nIn, dc, dx)
-      dSeq(t) = dx
-      val dhPrev = new Array[Double](d)
-      mtv(w, o.uz, d, d, dz, dhPrev)
-      mtv(w, o.ur, d, d, dr, dhPrev)
-      i = 0
-      while (i < d) {
-        dhPrev(i) += g(i) * (1 - z(i)) + dhr(i) * r(i)
-        i += 1
-      }
-      dhNext = dhPrev
-      t -= 1
-    }
-    dSeq
   }
 
   // ---- Multi-head scaled-dot self-attention ------------------------------
@@ -481,7 +324,7 @@ object TftNet {
     val du = new Array[Array[Double]](T)
     var i = 0
     while (i < T) {
-      outerAcc(grad, dims.aWo, d2, heads * kd, dy(i), c.u(i))
+      outer(grad, dims.aWo, d2, heads * kd, dy(i), c.u(i))
       var cc = 0; while (cc < d2) { grad(dims.aBo + cc) += dy(i)(cc); cc += 1 }
       val dui = new Array[Double](heads * kd)
       mtv(w, dims.aWo, d2, heads * kd, dy(i), dui)
@@ -531,9 +374,9 @@ object TftNet {
       }
       i = 0
       while (i < T) {
-        outerAcc(grad, wq, kd, d2, dq(i), seq(i))
-        outerAcc(grad, wk, kd, d2, dk(i), seq(i))
-        outerAcc(grad, wv, kd, d2, dv(i), seq(i))
+        outer(grad, wq, kd, d2, dq(i), seq(i))
+        outer(grad, wk, kd, d2, dk(i), seq(i))
+        outer(grad, wv, kd, d2, dv(i), seq(i))
         var cc = 0
         while (cc < kd) {
           grad(bq + cc) += dq(i)(cc)
@@ -617,7 +460,7 @@ object TftNet {
     val dy = new Array[Double](m)
     val loss = Optimizer.huberHead(cache.yhat, y, delta, dy)
     // Dense head
-    outerAcc(grad, hW, m, g2, dy, cache.grn2.out)
+    outer(grad, hW, m, g2, dy, cache.grn2.out)
     var i = 0; while (i < m) { grad(hB + i) += dy(i); i += 1 }
     val dgo = new Array[Double](g2)
     mtv(w, hW, m, g2, dy, dgo)

@@ -680,8 +680,8 @@ object TextQueries {
       cent
     })
 
-  /** Per-(JVM, sf) memo of the frozen coarse quantizer (the fitVarShared
-    * pattern): all six chunk-index consumers probe the IDENTICAL
+  /** Per-(JVM, sf) memo of the frozen coarse quantizer: all six
+    * chunk-index consumers probe the IDENTICAL
     * centroid literals, and the derivation is a deterministic function
     * of the seed docs, so whichever query runs first pays the (already
     * filtered-scan-cheap) build. */

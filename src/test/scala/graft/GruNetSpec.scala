@@ -52,8 +52,8 @@ class GruNetSpec extends SparkSpec {
       GruNet.lossGradSample(seq, y, w, dims, delta, grad)
       val eps = 1e-6
       // Spot-check a spread of parameters (full sweep done above).
-      Seq(dims.wzOff, dims.uzOff + 3, dims.bzOff + 1, dims.wrOff + 2,
-        dims.urOff + 5, dims.whOff + 1, dims.uhOff + 7, dims.bhOff,
+      Seq(dims.gru.wz, dims.gru.uz + 3, dims.gru.bz + 1, dims.gru.wr + 2,
+        dims.gru.ur + 5, dims.gru.wh + 1, dims.gru.uh + 7, dims.gru.bh,
         dims.woOff + 3, dims.boOff).foreach { i =>
         val wp = w.clone(); wp(i) += eps
         val wm = w.clone(); wm(i) -= eps

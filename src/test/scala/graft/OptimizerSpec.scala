@@ -9,12 +9,12 @@ import graft.ml.{Optimizer, Trainer}
   * RDDs are what they were before it, and no gradient pass outlives it. */
 class OptimizerSpec extends SparkSpec {
 
-  /** y = 2x, 32 train rows and 8 val rows. */
-  private def frame() = {
+  /** y = 2x, 32 train rows and 8 val rows; row `nanAt` (if any) has x = NaN. */
+  private def frame(nanAt: Int = -1) = {
     import spark.implicits._
     (0 until 40).map { i =>
       val x = i / 40.0
-      (Seq(x), 2 * x, if (i % 5 == 0) "val" else "train")
+      (Seq(if (i == nanAt) Double.NaN else x), 2 * x, if (i % 5 == 0) "val" else "train")
     }.toDF("x", "y", "split")
   }
 
@@ -60,6 +60,20 @@ class OptimizerSpec extends SparkSpec {
         })
     }
     assert(valPasses == 2)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, "no gradient pass outlives the fit")
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("a NaN in one train sample fails the fit, naming the epoch, and releases the samples") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val cfg = Trainer.Config(lr = 0.1, maxEpochs = 5, patience = 10)
+    val e = intercept[IllegalStateException] {
+      Optimizer.fit(frame(nanAt = 1), Array(0.0), 1, cfg)(decode)(
+        w => (s, g) => { val r = w(0) * s._1 - s._2; g(0) += r * s._1; 0.5 * r * r },
+        w => s => { val r = w(0) * s._1 - s._2; 0.5 * r * r })
+    }
+    assert(e.getMessage.contains("epoch 1"), e.getMessage)
     assert(sc.statusTracker.getActiveJobIds.isEmpty, "no gradient pass outlives the fit")
     assert(sc.getPersistentRDDs.keySet == before)
   }

@@ -32,6 +32,10 @@ import org.apache.spark.unsafe.types.UTF8String
 case class MarkerCounts(child: Expression, markerSets: Seq[Seq[String]])
   extends UnaryExpression {
 
+  // Set membership is one bit per set in an Int mask (`maskMap`).
+  require(markerSets.length <= 32,
+    s"marker_counts supports at most 32 marker sets, got ${markerSets.length}")
+
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(

@@ -482,7 +482,7 @@ object RelationalQueries {
          |  ${sqlR6(sqlSumRaw("f.value / grp_total"))} AS share_sum
          |FROM f JOIN dim ON f.grp = dim.grp
          |GROUP BY f.grp""".stripMargin) { (s, d) =>
-      val ss = s.newSession()
+      val ss = graft.Sessions.child(s)
       ss.conf.set("spark.sql.adaptive.enabled", "true")
       ss.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
       ss.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
@@ -533,7 +533,7 @@ object RelationalQueries {
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          |WHERE o_orderpriority = '1-URGENT'
          |GROUP BY 1""".stripMargin) { (s, d) =>
-      val ss = s.newSession()
+      val ss = graft.Sessions.child(s)
       ss.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       ss.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
       ss.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")

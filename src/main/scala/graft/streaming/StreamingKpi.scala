@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StreamingQueryListener, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
@@ -91,19 +92,25 @@ object StreamingKpi {
     }
 
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-      synchronized { done += e.runId.toString }
+      synchronized {
+        done += e.runId.toString
+        notifyAll()
+      }
 
     def snapshot(runId: String): Seq[BatchProgress] =
       synchronized(buf.filter(_.runId == runId).toSeq)
 
-    def isTerminated(runId: String): Boolean = synchronized(done.contains(runId))
-
-    /** Wait for the run's terminated event (bounded), so `snapshot` is
-      * complete when this returns true. */
-    def awaitTerminated(runId: String, timeoutMs: Long = 10000): Boolean = {
+    /** Wait up to `timeoutMs` for the run's terminated event; true once it
+      * has arrived, so `snapshot` is complete. Wakes as soon as
+      * [[onQueryTerminated]] fires; false only at the timeout. */
+    def awaitTerminated(runId: String, timeoutMs: Long = 10000): Boolean = synchronized {
       val deadline = System.nanoTime() + timeoutMs * 1000000L
-      while (!isTerminated(runId) && System.nanoTime() < deadline) Thread.sleep(20)
-      isTerminated(runId)
+      var left = timeoutMs * 1000000L
+      while (!done.contains(runId) && left > 0) {
+        java.util.concurrent.TimeUnit.NANOSECONDS.timedWait(this, left)
+        left = deadline - System.nanoTime()
+      }
+      done.contains(runId)
     }
   }
 
@@ -113,30 +120,63 @@ object StreamingKpi {
     * the caller's session. The caller's runtime-modifiable conf (e.g. a
     * state-store-provider override) is carried over, since `newSession`
     * starts from builder-time defaults; static and non-SQL keys are not
-    * settable on a live session and are left out.
+    * settable on a live session and are left out. Built by
+    * [[graft.Sessions.child]], so every drain reuses the classes the
+    * previous drains compiled instead of paying Janino again.
     *
     * State partitions (`spark.sql.shuffle.partitions`, which fixes the
-    * stateful operators' partition count) are set to the context's
-    * `defaultParallelism`, capped at 8: stateful queries pay a
-    * per-state-partition constant every micro-batch (store commit +
-    * snapshot + task), so below 8 task slots one partition per slot runs
-    * those commits in one wave (4 rather than 8 at local[4] halves the
-    * state-commit time of the bounded drains), and from 8 slots on the
-    * bounded drains keep 8 (half the drain time of 32 at local[32] and
-    * sf0.1 state sizes). Results do not depend on the count: the streamed
-    * aggregates are exact-decimal and the keyed state is per key. A query
-    * restarted from an existing checkpoint keeps the partition count the
-    * checkpoint was written with, whatever this session says. Unbounded
-    * production runs should size state partitions to state volume, not
-    * cores. */
+    * stateful operators' partition count) start at ONE; [[runBounded]]
+    * raises them from the drain's input size ([[statePartitions]]). A
+    * query restarted from an existing checkpoint keeps the partition
+    * count the checkpoint was written with, whatever this session says.
+    * Unbounded production runs should size state partitions to state
+    * volume, not cores. */
   private[graft] def childSession(spark: SparkSession): SparkSession = {
-    val s2 = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      if (spark.conf.isModifiable(k)) s2.conf.set(k, v)
-    }
-    s2.conf.set("spark.sql.shuffle.partitions",
-      math.min(8, spark.sparkContext.defaultParallelism).toString)
+    val s2 = graft.Sessions.child(spark,
+      spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) })
+    s2.conf.set(StatePartitionsKey, "1")
     s2
+  }
+
+  private val StatePartitionsKey = "spark.sql.shuffle.partitions"
+
+  /** Input rows that justify one more state partition. */
+  private val RowsPerStatePartition = 25000L
+
+  /** State partitions for a bounded drain of `stream`: one per
+    * [[RowsPerStatePartition]] rows of its file-source input (counted by
+    * a batch read of the same files), at least one, at most one per task
+    * slot. A streaming source that is not a path (memory, rate, Kafka)
+    * counts 0 rows.
+    *
+    * A stateful query pays a per-state-partition constant every
+    * micro-batch — store commit, snapshot upload, one task — so on small
+    * input that constant is the drain's floor, not the work on the rows.
+    * Measured at local[4] on the benchmark's KPI stream (20 001 events in
+    * 10 000-row micro-batches, 5 789 state rows, 271 KB): one
+    * RocksDB-backed IAT micro-batch summed 745–882 ms of commit over 4
+    * partitions (526–581 ms of it zipping snapshot files) and 107–159 ms
+    * on 1; the windowed KPI aggregate's HDFS-store commit was 305–497 ms
+    * over 4 and 29–59 ms on 1. On large input the per-row state work is
+    * the floor and wants the task slots: over the sf0.1 events (100 000
+    * rows in one micro-batch) `stream_user_digest_tws` took 4.0–5.9 s on 1
+    * partition against 1.9–2.9 s on 4, and 1-minute windows (80 020
+    * state rows, 50 MB) took 6.3 s on 1 against 4.3 s on 4. Results do
+    * not depend on the count: the streamed aggregates are exact-decimal
+    * and the keyed state is per key (StreamingKpiSpec pins 1 against 4).
+    * A caller that knows better passes `spark.sql.shuffle.partitions` in
+    * [[runBounded]]'s `extraConf`. */
+  private[graft] def statePartitions(stream: DataFrame): Int = {
+    val spark = stream.sparkSession
+    val rows = stream.queryExecution.logical.collectLeaves()
+      .collect { case r: StreamingRelation if r.dataSource.options.contains("path") => r.dataSource }
+      .distinct
+      .map { ds =>
+        val reader = spark.read.format(ds.className).options(ds.options)
+        ds.userSpecifiedSchema.fold(reader)(reader.schema).load().count()
+      }.sum
+    val wanted = (rows + RowsPerStatePartition - 1) / RowsPerStatePartition
+    math.max(1L, math.min(wanted, spark.sparkContext.defaultParallelism.toLong)).toInt
   }
 
   /** Run a bounded streaming query into a memory sink and return the result
@@ -144,8 +184,8 @@ object StreamingKpi {
     * table), Append for stateful flatMap output.
     *
     * The stream is BUILT (via `build`) and run in an isolated
-    * [[childSession]], with one state partition per task slot up to 8
-    * (see there for why, and for unbounded runs). */
+    * [[childSession]], on [[statePartitions]] state partitions unless
+    * `extraConf` sets `spark.sql.shuffle.partitions`. */
   def runBounded(spark: SparkSession, build: SparkSession => DataFrame,
                  name: String, mode: OutputMode,
                  extraConf: Map[String, String] = Map.empty): DataFrame =
@@ -166,7 +206,11 @@ object StreamingKpi {
     s2.streams.addListener(progressLog)
     // Re-runs in one session: memory sink names must be fresh.
     val sink = s"${name}_${System.nanoTime()}"
-    val q = build(s2).writeStream
+    val stream = build(s2)
+    // Read at start(), so it can still follow the built input.
+    if (!extraConf.contains(StatePartitionsKey))
+      s2.conf.set(StatePartitionsKey, statePartitions(stream).toString)
+    val q = stream.writeStream
       .format("memory")
       .queryName(sink)
       .outputMode(mode)
@@ -176,7 +220,10 @@ object StreamingKpi {
       q.stop()
       // Progress events are async; the terminated event (which follows
       // every progress event of this run in bus order) marks completeness.
-      progressLog.awaitTerminated(q.runId.toString)
+      if (!progressLog.awaitTerminated(q.runId.toString))
+        throw new IllegalStateException(
+          s"streamed drain '$name' (run ${q.runId}): no terminated event " +
+            "within 10 s, so its progress list would be incomplete")
       progressLog.snapshot(q.runId.toString)
     } finally {
       if (q.isActive) q.stop()

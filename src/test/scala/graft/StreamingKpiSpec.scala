@@ -2,9 +2,12 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 
 import graft.streaming.StreamingKpi
 
@@ -180,6 +183,107 @@ class StreamingKpiSpec extends SparkSpec {
     assert(progress.map(_.batchId) == progress.map(_.batchId).sorted)
     // The windowed aggregate holds state: the store must report rows.
     assert(progress.last.stateRows > 0, "stateful query reported empty state")
+  }
+
+  test("ProgressLog.awaitTerminated wakes on the terminated event, false at the timeout") {
+    val log = new StreamingKpi.ProgressLog
+    val runId = java.util.UUID.randomUUID()
+    @volatile var postedAt = 0L
+    val poster = new Thread(() => {
+      Thread.sleep(200)
+      postedAt = System.nanoTime()
+      log.onQueryTerminated(new StreamingQueryListener.QueryTerminatedEvent(
+        java.util.UUID.randomUUID(), runId, None))
+    })
+    poster.start()
+    assert(log.awaitTerminated(runId.toString, timeoutMs = 10000))
+    val wokeMs = (System.nanoTime() - postedAt) / 1e6
+    poster.join()
+    assert(wokeMs < 1000, s"woke $wokeMs ms after the terminated event")
+    // Already terminated: no wait at all.
+    val t0 = System.nanoTime()
+    assert(log.awaitTerminated(runId.toString, timeoutMs = 10000))
+    assert((System.nanoTime() - t0) / 1e6 < 1000)
+    // No event: false, and only once the timeout has passed.
+    val t1 = System.nanoTime()
+    assert(!log.awaitTerminated(java.util.UUID.randomUUID().toString, timeoutMs = 300))
+    assert((System.nanoTime() - t1) / 1e6 >= 300)
+  }
+
+  test("a repeated streamed drain compiles no new classes") {
+    // Child sessions share the JVM's codegen cache (Sessions.child): the
+    // second identical drain must find every generated class compiled.
+    val sfDir = "/root/testdata/sf0.001"
+    def drain(): Long = StreamingKpi.runBounded(spark,
+      s2 => StreamingKpi.flowIatTws(s2, StreamingKpi.eventsStream(s2, sfDir)).toDF(),
+      "compile_once", OutputMode.Append, StreamingKpi.TwsConf).count()
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val n1 = drain()
+    val c0 = compiles
+    val n2 = drain()
+    val added = compiles - c0
+    assert(n1 > 0 && n2 == n1)
+    assert(added == 0, s"the second identical drain compiled $added classes")
+  }
+
+  test("statePartitions: one per 25 000 input rows, at least 1, at most one per task slot") {
+    val s2 = StreamingKpi.childSession(spark)
+    def parts(sf: String) =
+      StreamingKpi.statePartitions(StreamingKpi.eventsStream(s2, s"/root/testdata/$sf"))
+    assert(parts("sf0.001") == 1) // 1 000 rows
+    assert(parts("sf0.01") == 1) // 10 000 rows
+    assert(parts("sf0.1") == 4) // 100 000 rows, local[4]
+    // A source without a path counts no rows.
+    implicit val sqlCtx = spark.sqlContext
+    assert(StreamingKpi.statePartitions(MemoryStream[Long].toDF()) == 1)
+  }
+
+  test("bounded drains give the same rows on 1 and on 4 state partitions") {
+    val sfDir = "/root/testdata/sf0.001"
+    // Tumbling KPIs over the packet view: every KpiExprs KPI that needs no
+    // IAT column (lag is not a streaming operator).
+    val iatBased = Set("Byte_Velocity", "Avg_IAT", "Jitter", "IAT_Skewness",
+      "IAT_Kurtosis", "Min_IAT", "Max_IAT", "IAT_PAPR", "Idle_Periods",
+      "Idle_Rate", "IAT_Median")
+    val kpis = graft.functions.KpiExprs.kpis(0.1, 100.0, 1400.0)
+      .filterNot(k => iatBased(k.name))
+    // State partitions each drain really ran with, from its progress.
+    final class StatePartitions extends StreamingQueryListener {
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        Option(e.progress.stateOperators).getOrElse(Array.empty)
+          .foreach(o => seen.add(o.numShufflePartitions))
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    def drains(extraConf: Map[String, String]) = {
+      val parts = new StatePartitions
+      def watched(f: SparkSession => DataFrame): SparkSession => DataFrame = { s2 =>
+        s2.streams.addListener(parts)
+        f(s2)
+      }
+      val kpi = StreamingKpi.runBounded(spark, watched(s2 =>
+        graft.operators.FlowOps.packetView(
+          StreamingKpi.eventsStream(s2, sfDir).withWatermark("ts", "10 seconds"))
+          .groupBy(col("slice"), window(col("ts"), "1 hour").as("w"))
+          .agg(kpis.head.sparkNamed, kpis.tail.map(_.sparkNamed): _*)
+          .select(col("slice") +: col("w.start").as("window_start") +:
+            kpis.map(k => col(k.name)): _*)),
+        "parts_kpi", OutputMode.Complete, extraConf)
+      val iat = StreamingKpi.runBounded(spark, watched(s2 =>
+        StreamingKpi.flowIatTws(s2, StreamingKpi.eventsStream(s2, sfDir)).toDF()),
+        "parts_iat", OutputMode.Append, extraConf ++ StreamingKpi.TwsConf)
+      (kpi, iat, parts.seen.asScala.toSet)
+    }
+    val (kpi1, iat1, parts1) = drains(Map.empty)
+    val (kpi4, iat4, parts4) =
+      drains(Map("spark.sql.shuffle.partitions" -> "4"))
+    assert(parts1 == Set(1L) && parts4 == Set(4L), s"ran on $parts1 and $parts4")
+    for ((a, b) <- Seq(kpi1 -> kpi4, iat1 -> iat4)) {
+      assert(a.count() > 0 && a.count() == b.count())
+      assert(a.except(b).isEmpty && b.except(a).isEmpty)
+    }
   }
 
   test("stream-stream time-range join matches across micro-batches") {

@@ -99,6 +99,20 @@ class TextFnsSpec extends SparkSpec {
     assert(counted.map(_.getString(0)).toSet == Set("en"))
   }
 
+  test("MarkerCounts: 32 marker sets count (bit 31 included), 33 are rejected") {
+    // Set membership is one bit per set in an Int mask: a 33rd set would
+    // wrap onto bit 0 and be counted as set 0.
+    val sets = Seq.tabulate(33)(i => Seq(s"m$i"))
+    val e = intercept[IllegalArgumentException](
+      graft.functions.expr.MarkerCounts(col("toks"), sets))
+    assert(e.getMessage.contains("at most 32 marker sets, got 33"))
+    val counts = spark.range(1)
+      .select(graft.functions.expr.MarkerCounts(
+        expr("array('m31', 'm0', 'm31')"), sets.take(32)).as("c"))
+      .as[Seq[Int]].head()
+    assert(counts == Seq.tabulate(32)(i => if (i == 31) 2 else if (i == 0) 1 else 0))
+  }
+
   test("media stub: decode/resize/embed round-trip, corrupt-safe") {
     val feats = MediaOps.extract(MediaOps.corpus(spark, 30)).collect()
     assert(feats.length == 30)
